@@ -18,6 +18,11 @@ reference's, so each sink asks a :class:`Dialect` to render its SQL:
 Semantics are identical: a row becomes ready ``delay`` seconds from the
 write.  The only observable difference is whose clock defines "now", and
 the MySQL path deliberately matches the reference (DB clock).
+
+The dialect is a property of the connection: every source and sink reads
+it from the connection factory's ``dialect`` attribute
+(:func:`factory_dialect`), so a job handed a :class:`MySQLConnFactory`
+speaks MySQL end to end.  A factory without the attribute is SQLite.
 """
 
 from __future__ import annotations
@@ -94,6 +99,12 @@ MYSQL = Dialect(name="mysql", placeholder="%s", server_side_interval=True)
 DIALECTS = {d.name: d for d in (SQLITE, MYSQL)}
 
 
+def factory_dialect(conn_factory) -> Dialect:
+    """The SQL dialect of the connections ``conn_factory`` opens; SQLite
+    when the factory does not declare one."""
+    return getattr(conn_factory, "dialect", SQLITE)
+
+
 class MySQLConnFactory:
     """Picklable MySQL connection factory (production twin of
     ``SqliteConnFactory``).  Import-gated: neither PyMySQL nor
@@ -101,6 +112,8 @@ class MySQLConnFactory:
     only stores parameters) and ``__call__`` raises ``ImportError`` with a
     clear message if no driver is installed on the executors.
     """
+
+    dialect = MYSQL
 
     def __init__(self, host: str, user: str, password: str, database: str,
                  port: int = 3306):

@@ -36,7 +36,9 @@ def list_partition_values(
     ``key=N`` dir).  Every caller here treats a listed-but-empty batch
     exactly like an empty DataFrame slice — it contributes no rows to
     the fold and its dir is retired by the same sweep — so the substitution
-    is behavior-preserving even in crash-debris states."""
+    is behavior-preserving even in crash-debris states.  Directory names
+    whose value is not an integer are skipped, as a select-distinct over
+    the integer column never saw them."""
     jvm = spark._jvm
     jpath = jvm.org.apache.hadoop.fs.Path(pattern)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -46,8 +48,14 @@ def list_partition_values(
     if statuses is not None:
         for status in statuses:
             name = status.getPath().getName()
-            if name.startswith(prefix):
+            if not name.startswith(prefix):
+                continue
+            try:
                 vals.add(int(name[len(prefix):]))
+            except ValueError:
+                # not a batch partition: a null key's
+                # __HIVE_DEFAULT_PARTITION__ or crash debris like 0.tmp
+                continue
     return sorted(vals)
 
 

@@ -10,8 +10,10 @@ function usable standalone (batch) or inside ``foreachBatch`` (streaming):
 - W4 transactional log-and-delete
   (``sink/TransactionalLogAndDeleteSink.java:26-183``).
 
-Portability: SQL is rendered per-:class:`~..dbdialect.Dialect`.  The
-default :data:`~..dbdialect.SQLITE` dialect computes the absolute
+Portability: SQL is rendered per-:class:`~..dbdialect.Dialect`, taken
+from the connection factory's ``dialect`` attribute
+(:func:`~..dbdialect.factory_dialect`).  The
+:data:`~..dbdialect.SQLITE` dialect computes the absolute
 ``next_retry_time`` executor-side and binds it as a plain timestamp
 parameter (SQLite has no ``INTERVAL``); the :data:`~..dbdialect.MYSQL`
 dialect emits the reference's exact server-side DML
@@ -49,7 +51,7 @@ from ..config import (
     TAG_MAX_RETRY,
     TAG_UPDATE,
 )
-from ..dbdialect import Dialect, SQLITE
+from ..dbdialect import SQLITE, factory_dialect
 
 ConnFactory = Callable[[], object]
 
@@ -58,6 +60,8 @@ class SqliteConnFactory:
     """Picklable SQLite connection factory (tests / local stand-in for the
     reference's MySQL).  A class instead of a closure so executors resolve
     it by import, not by value."""
+
+    dialect = SQLITE
 
     def __init__(self, path: str, timeout: float = 30.0):
         self.path = path
@@ -115,7 +119,6 @@ def write_invoice_records(
     conn_factory: ConnFactory,
     cfg: EngineConfig | None = None,
     table: str = "async_inv_in",
-    dialect: Dialect = SQLITE,
 ) -> None:
     """W1: batched insert of INVOICE_MYSQL_RECORD rows.
 
@@ -126,7 +129,7 @@ def write_invoice_records(
     """
     cfg = cfg or EngineConfig()
     cols = INVOICE_INSERT_COLUMNS
-    sql = dialect.insert_sql(table, cols)
+    sql = factory_dialect(conn_factory).insert_sql(table, cols)
     batch_size = cfg.mysql_batch_size
     max_retries = cfg.mysql_max_retries
 
@@ -161,7 +164,6 @@ def write_retry_emissions(
     df: DataFrame,
     conn_factory: ConnFactory,
     cfg: EngineConfig | None = None,
-    dialect: Dialect = SQLITE,
     now: datetime | None = None,
 ) -> None:
     """W3: tag-dispatched retry-queue DML (``sink/InvoiceRetrySink.java``).
@@ -180,6 +182,7 @@ def write_retry_emissions(
     reference; otherwise the absolute timestamp ``now + delay`` is bound.
     """
     cfg = cfg or EngineConfig()
+    dialect = factory_dialect(conn_factory)
     insert_sql = dialect.retry_insert_sql()
     update_sql = dialect.retry_update_sql()
     delete_sql = dialect.retry_delete_sql()
@@ -245,7 +248,6 @@ def write_log_and_delete(
     df: DataFrame,
     conn_factory: ConnFactory,
     cfg: EngineConfig | None = None,
-    dialect: Dialect = SQLITE,
     now: datetime | None = None,
 ) -> None:
     """W4: transactional success-log + source-row delete
@@ -258,6 +260,7 @@ def write_log_and_delete(
     by id.  Idempotent under replay because the delete is by primary key.
     """
     cfg = cfg or EngineConfig()
+    dialect = factory_dialect(conn_factory)
     insert_sql = dialect.insert_sql("async_inv_succ_log", SUCC_LOG_COLUMNS)
     delete_in_sql = dialect.delete_by_id_sql("async_inv_in")
     delete_out_sql = dialect.delete_by_id_sql("async_inv_out")

@@ -7,17 +7,21 @@ micro-batches — the shape used by the streaming jobs) or called directly in
 batch tests:
 
 - S2 ``poll_async_inv_in``  — ``source/AsyncInvInSource.java:51-103``:
-  ``SELECT ... WHERE res_type = 2 AND state = 4 AND id > ? ORDER BY id ASC
-  LIMIT fetchSize`` (``:55``), advancing an id high-water mark (the
-  Structured-Streaming "offset" of this source).
+  ``SELECT ... WHERE <ready> AND id > ? ORDER BY id ASC LIMIT fetchSize``
+  (``:55``), advancing an id high-water mark (the Structured-Streaming
+  "offset" of this source).
 - S3 ``poll_async_inv_out`` — ``source/AsyncInvOutSource.java:51-105``:
-  same with predicate ``res_type = 2 AND state = 0``.
+  the same fetch with the ``async_inv_out`` ready predicate.
 - S4 ``claim_retry_batch``  — ``source/InvoiceRetrySource.java:44-99``:
   ``SELECT ... WHERE state = 'PENDING' AND next_retry_time <= now AND
   job = ? ORDER BY next_retry_time LIMIT ?`` (``:48``), then
   ``UPDATE ... SET state = 'PROCESSING'`` for the claimed ids in one
   transaction (``:76-88``) — the at-most-once claim that keeps two pollers
   from re-processing the same row; rollback on error (``:91-94``).
+
+Both polls and the ``table_queue`` streaming reader (``sources/stream.py``)
+share one row-level fetch, :func:`fetch_queue_rows`; the ready predicates
+live in :data:`QUEUE_TABLES`.
 
 The predicate + LIMIT are pushed into the database exactly as the reference
 pushes them (hand-written WHERE — same place, same effect as Catalyst JDBC
@@ -40,13 +44,17 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from ..config import EngineConfig, RETRY_STATE_PENDING, RETRY_STATE_PROCESSING
-from ..dbdialect import Dialect, SQLITE
+from ..dbdialect import factory_dialect
 from ..schemas import ASYNC_INV_IN_RECORD, ASYNC_INV_OUT_RECORD, INVOICE_RETRY_RECORD
 
 ConnFactory = Callable[[], object]
 
-_INV_IN_COLS = [f.name for f in ASYNC_INV_IN_RECORD.fields]
-_INV_OUT_COLS = [f.name for f in ASYNC_INV_OUT_RECORD.fields]
+#: queue table → (schema, ready predicate): the reference's hand-written
+#: WHEREs (AsyncInvInSource.java:55, AsyncInvOutSource.java:55)
+QUEUE_TABLES = {
+    "async_inv_in": (ASYNC_INV_IN_RECORD, "res_type = 2 AND state = 4"),
+    "async_inv_out": (ASYNC_INV_OUT_RECORD, "res_type = 2 AND state = 0"),
+}
 _RETRY_COLS = [f.name for f in INVOICE_RETRY_RECORD.fields]
 
 
@@ -70,14 +78,28 @@ def _coerce(rows: list[tuple], schema) -> list[tuple]:
     return out
 
 
-def _fetch(
-    spark: SparkSession,
+def fetch_queue_rows(
     conn_factory: ConnFactory,
-    sql: str,
-    params: tuple,
-    columns: list[str],
-    schema,
-) -> tuple[DataFrame, list[tuple]]:
+    table: str,
+    after_id: int,
+    upto_id: int | None = None,
+    limit: int | None = None,
+) -> list[tuple]:
+    """Ready rows of a queue table with ``after_id < id [<= upto_id]``, in
+    id order, at most ``limit`` of them, timestamps coerced.  The one
+    row-level queue fetch behind the poll functions and the ``table_queue``
+    streaming reader."""
+    schema, ready = QUEUE_TABLES[table]
+    q = factory_dialect(conn_factory).placeholder
+    cols = ", ".join(f.name for f in schema.fields)
+    sql = f"SELECT {cols} FROM {table} WHERE {ready} AND id > {q}"
+    params: tuple = (after_id,)
+    if upto_id is not None:
+        sql += f" AND id <= {q}"
+        params += (upto_id,)
+    sql += " ORDER BY id ASC"
+    if limit is not None:
+        sql += f" LIMIT {limit}"
     conn = conn_factory()
     try:
         cur = conn.cursor()
@@ -85,10 +107,20 @@ def _fetch(
         rows = cur.fetchall()
     finally:
         conn.close()
-    df = spark.createDataFrame(_coerce(rows, schema), schema) if rows else (
-        spark.createDataFrame([], schema)
-    )
-    return df, rows
+    return _coerce(rows, schema)
+
+
+def _poll(
+    spark: SparkSession,
+    conn_factory: ConnFactory,
+    table: str,
+    cfg: EngineConfig | None,
+    last_id: int,
+) -> tuple[DataFrame, int]:
+    cfg = cfg or EngineConfig()
+    rows = fetch_queue_rows(conn_factory, table, last_id, limit=cfg.mysql_fetch_size)
+    new_last = max((r[0] for r in rows), default=last_id)
+    return spark.createDataFrame(rows, QUEUE_TABLES[table][0]), new_last
 
 
 def poll_async_inv_in(
@@ -96,24 +128,13 @@ def poll_async_inv_in(
     conn_factory: ConnFactory,
     cfg: EngineConfig | None = None,
     last_id: int = 0,
-    dialect: Dialect = SQLITE,
 ) -> tuple[DataFrame, int]:
     """One poll of ``async_inv_in`` past the id high-water mark.
 
     Returns ``(rows, new_last_id)``; the caller persists ``new_last_id``
     as the stream offset.
     """
-    cfg = cfg or EngineConfig()
-    sql = (
-        f"SELECT {', '.join(_INV_IN_COLS)} FROM async_inv_in "
-        f"WHERE res_type = 2 AND state = 4 AND id > {dialect.placeholder} "
-        f"ORDER BY id ASC LIMIT {cfg.mysql_fetch_size}"
-    )
-    df, rows = _fetch(
-        spark, conn_factory, sql, (last_id,), _INV_IN_COLS, ASYNC_INV_IN_RECORD
-    )
-    new_last = max((r[0] for r in rows), default=last_id)
-    return df, new_last
+    return _poll(spark, conn_factory, "async_inv_in", cfg, last_id)
 
 
 def poll_async_inv_out(
@@ -121,21 +142,10 @@ def poll_async_inv_out(
     conn_factory: ConnFactory,
     cfg: EngineConfig | None = None,
     last_id: int = 0,
-    dialect: Dialect = SQLITE,
 ) -> tuple[DataFrame, int]:
-    """One poll of ``async_inv_out`` (predicate ``res_type=2 AND state=0``,
-    ``AsyncInvOutSource.java:55``)."""
-    cfg = cfg or EngineConfig()
-    sql = (
-        f"SELECT {', '.join(_INV_OUT_COLS)} FROM async_inv_out "
-        f"WHERE res_type = 2 AND state = 0 AND id > {dialect.placeholder} "
-        f"ORDER BY id ASC LIMIT {cfg.mysql_fetch_size}"
-    )
-    df, rows = _fetch(
-        spark, conn_factory, sql, (last_id,), _INV_OUT_COLS, ASYNC_INV_OUT_RECORD
-    )
-    new_last = max((r[0] for r in rows), default=last_id)
-    return df, new_last
+    """One poll of ``async_inv_out`` past the id high-water mark
+    (``AsyncInvOutSource.java:55``)."""
+    return _poll(spark, conn_factory, "async_inv_out", cfg, last_id)
 
 
 def claim_retry_batch(
@@ -143,7 +153,6 @@ def claim_retry_batch(
     conn_factory: ConnFactory,
     job: str,
     cfg: EngineConfig | None = None,
-    dialect: Dialect = SQLITE,
     now: datetime | None = None,
     reap_processing_after_s: int | None = None,
 ) -> DataFrame:
@@ -180,11 +189,13 @@ def claim_retry_batch(
     (``EngineConfig.processing_lease_s``) so live epochs never lose rows
     mid-flight.
 
-    Under a ``server_side_interval`` dialect the due check is the
-    reference's ``next_retry_time <= CURRENT_TIMESTAMP`` (DB clock,
+    Under a ``server_side_interval`` dialect (the factory's, see
+    :func:`~..dbdialect.factory_dialect`) the due check is the reference's
+    ``next_retry_time <= CURRENT_TIMESTAMP`` (DB clock,
     ``InvoiceRetrySource.java:48``); otherwise "now" is bound client-side.
     """
     cfg = cfg or EngineConfig()
+    dialect = factory_dialect(conn_factory)
     q = dialect.placeholder
     when = now or _utcnow()
     due = "CURRENT_TIMESTAMP" if dialect.server_side_interval else q

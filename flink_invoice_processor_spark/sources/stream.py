@@ -31,10 +31,11 @@ Usage::
 
 Backends: ``backend=sqlite`` (default; ``db_path`` option — what tests
 run on) or ``backend=mysql`` (``host``/``port``/``user``/``password``/
-``database`` options via :class:`~..dbdialect.MySQLConnFactory`; the
-driver library is import-gated since no MySQL client ships in this
-container).  Same SQL, same offsets either way — only ``_connect``
-differs.
+``database`` options).  The reader turns its options into a
+``SqliteConnFactory`` or a :class:`~..dbdialect.MySQLConnFactory` and
+fetches through :func:`~.dbapi.fetch_queue_rows`, which takes the SQL
+dialect from that factory; :func:`table_queue_options` is the inverse,
+the options that reach a given factory's database.
 
 
 VISIBILITY ASSUMPTION (same one the reference makes, AsyncInvInSource
@@ -49,112 +50,74 @@ commit-ordered sequence.
 
 from __future__ import annotations
 
-import sqlite3
 from typing import Iterator, Tuple
 
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 from pyspark.sql.types import StructType
 
-from ..schemas import ASYNC_INV_IN_RECORD, ASYNC_INV_OUT_RECORD
-
-#: table → (schema, ready-predicate) — the reference's hand-written WHEREs
-#: (AsyncInvInSource.java:55, AsyncInvOutSource.java:55).
-_TABLES = {
-    "async_inv_in": (ASYNC_INV_IN_RECORD, "res_type = 2 AND state = 4"),
-    "async_inv_out": (ASYNC_INV_OUT_RECORD, "res_type = 2 AND state = 0"),
-}
+from ..dbdialect import MySQLConnFactory
+from ..sinks.dbapi import ConnFactory, SqliteConnFactory
+from .dbapi import QUEUE_TABLES, fetch_queue_rows
 
 
 def queue_table_schema(table: str) -> StructType:
-    return _TABLES[table][0]
+    return QUEUE_TABLES[table][0]
+
+
+def table_queue_options(conn_factory: ConnFactory) -> dict[str, str]:
+    """Reader options that reach the database ``conn_factory`` connects
+    to: a :class:`MySQLConnFactory`'s server, otherwise the SQLite file at
+    the factory's ``path``."""
+    if isinstance(conn_factory, MySQLConnFactory):
+        return {
+            "backend": "mysql",
+            "host": conn_factory.host,
+            "port": str(conn_factory.port),
+            "user": conn_factory.user,
+            "password": conn_factory.password,
+            "database": conn_factory.database,
+        }
+    return {"backend": "sqlite", "db_path": conn_factory.path}
+
+
+def _conn_factory(options: dict) -> ConnFactory:
+    backend = options.get("backend", "sqlite")
+    if backend == "sqlite":
+        return SqliteConnFactory(options["db_path"])
+    if backend == "mysql":
+        return MySQLConnFactory(
+            host=options["host"],
+            port=int(options.get("port", "3306")),
+            user=options["user"],
+            password=options.get("password", ""),
+            database=options["database"],
+        )
+    raise ValueError(f"unknown backend: {backend!r}")
 
 
 class TableQueueStreamReader(SimpleDataSourceStreamReader):
     def __init__(self, options: dict):
-        self.backend = options.get("backend", "sqlite")
-        if self.backend == "sqlite":
-            self.db_path = options["db_path"]
-            self._factory = None
-            self._param = "?"
-        elif self.backend == "mysql":
-            from ..dbdialect import MYSQL, MySQLConnFactory
-
-            self._factory = MySQLConnFactory(
-                host=options["host"],
-                port=int(options.get("port", "3306")),
-                user=options["user"],
-                password=options.get("password", ""),
-                database=options["database"],
-            )
-            self._param = MYSQL.placeholder
-        else:
-            raise ValueError(f"unknown backend: {self.backend!r}")
+        self.conn_factory = _conn_factory(options)
         self.table = options.get("table", "async_inv_in")
-        if self.table not in _TABLES:
+        if self.table not in QUEUE_TABLES:
             raise ValueError(f"unknown queue table: {self.table!r}")
-        self.schema, self.predicate = _TABLES[self.table]
         self.fetch_size = int(options.get("fetch_size", "2000"))
-        self.columns = [f.name for f in self.schema.fields]
-        self._ts_idx = [
-            i
-            for i, f in enumerate(self.schema.fields)
-            if f.dataType.typeName() == "timestamp"
-        ]
-
-    def _connect(self):
-        if self._factory is not None:
-            return self._factory()
-        return sqlite3.connect(self.db_path)
-
-    def _rows(self, where: str, params: tuple, limit: int | None) -> list[tuple]:
-        sql = (
-            f"SELECT {', '.join(self.columns)} FROM {self.table} "
-            f"WHERE {self.predicate} AND {where} ORDER BY id ASC"
-        )
-        if limit is not None:
-            sql += f" LIMIT {limit}"
-        conn = self._connect()
-        try:
-            # portable DBAPI cursor protocol — sqlite3's Connection.execute
-            # shortcut does not exist on pymysql/mysql-connector connections
-            cur = conn.cursor()
-            try:
-                cur.execute(sql, params)
-                rows = cur.fetchall()
-            finally:
-                cur.close()
-        finally:
-            conn.close()
-        if self._ts_idx:
-            from datetime import datetime
-
-            fixed = []
-            for r in rows:
-                r = list(r)
-                for i in self._ts_idx:
-                    if isinstance(r[i], str):
-                        r[i] = datetime.fromisoformat(r[i])
-                fixed.append(tuple(r))
-            rows = fixed
-        return rows
 
     def initialOffset(self) -> dict:
         return {"last_id": 0}
 
     def read(self, start: dict) -> Tuple[Iterator[Tuple], dict]:
-        q = self._param
-        rows = self._rows(f"id > {q}", (start["last_id"],), self.fetch_size)
+        rows = fetch_queue_rows(
+            self.conn_factory, self.table, start["last_id"], limit=self.fetch_size
+        )
         new_last = max((r[0] for r in rows), default=start["last_id"])
         return iter(rows), {"last_id": new_last}
 
     def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[Tuple]:
         # deterministic replay of an uncommitted range after restart
-        q = self._param
         return iter(
-            self._rows(
-                f"id > {q} AND id <= {q}",
-                (start["last_id"], end["last_id"]),
-                None,
+            fetch_queue_rows(
+                self.conn_factory, self.table, start["last_id"], upto_id=end["last_id"]
             )
         )
 

@@ -20,8 +20,13 @@ each micro-batch by ``assign_batch_seq``.  The strict per-key
 count-or-timeout batcher (``applyInPandasWithState``) lives in
 ``streaming/batcher.py`` for users who need mid-interval flushes.
 
-Sinks are injected as callables so the same wiring runs against MySQL in
-production, SQLite in tests, and a collector in benchmarks.
+The response path is written once: ``response_micro_batch`` is the body
+of both the ``response_cycle`` driver loop and the streaming
+``run_invoice_response_stream_job``.  The packet sink is an injected
+callable and every source and sink takes its SQL dialect from the
+connection factory, so the same wiring runs against MySQL in production
+(``dbdialect.MySQLConnFactory``), SQLite in tests, and a collector in
+benchmarks.
 """
 
 from __future__ import annotations
@@ -49,31 +54,31 @@ from ..sources.dbapi import (
 )
 from .kafka import kafka_request_stream
 
+#: how long the stream job remembers an envelope key after its first
+#: arrival, dropping re-deliveries within that horizon
+RESPONSE_DEDUP_DELAY = "10 minutes"
+
 
 def request_micro_batch(
     packets_df: DataFrame,
     spark: SparkSession,
     cfg: EngineConfig,
     conn_factory: ConnFactory,
-    claim_retries: bool = True,
 ) -> None:
     """One micro-batch of the request job: new packets + claimed retry rows
     → insert valid records, enqueue failures.  Usable directly as the body
     of ``foreachBatch``."""
     valid, retry = parse_request_packets(packets_df, cfg)
-    if claim_retries:
-        # the reap lease revives claims orphaned by an epoch that died
-        # between its claim commit and its sink (the replayed epoch
-        # cannot re-claim them itself — the flip already committed)
-        claimed = claim_retry_batch(
-            spark, conn_factory, RETRY_JOB_REQUEST, cfg,
-            reap_processing_after_s=cfg.processing_lease_s,
-        )
-        r_valid, r_retry = transform_retry_records(claimed, cfg)
-        valid = valid.unionByName(r_valid)
-        retry = retry.unionByName(r_retry)
-    write_invoice_records(valid, conn_factory, cfg)
-    write_retry_emissions(retry, conn_factory, cfg)
+    # the reap lease revives claims orphaned by an epoch that died
+    # between its claim commit and its sink (the replayed epoch
+    # cannot re-claim them itself — the flip already committed)
+    claimed = claim_retry_batch(
+        spark, conn_factory, RETRY_JOB_REQUEST, cfg,
+        reap_processing_after_s=cfg.processing_lease_s,
+    )
+    r_valid, r_retry = transform_retry_records(claimed, cfg)
+    write_invoice_records(valid.unionByName(r_valid), conn_factory, cfg)
+    write_retry_emissions(retry.unionByName(r_retry), conn_factory, cfg)
 
 
 def run_invoice_request_job(
@@ -98,6 +103,37 @@ def run_invoice_request_job(
     )
 
 
+def response_micro_batch(
+    envelope: DataFrame,
+    spark: SparkSession,
+    cfg: EngineConfig,
+    conn_factory: ConnFactory,
+    packet_sink: Callable[[DataFrame], None],
+) -> None:
+    """One micro-batch of the response job: envelope rows + claimed
+    RESPONSE retry rows → packets to ``packet_sink``, successes to the
+    log-and-delete sink, failures to the retry-queue sink.  The body of
+    both ``response_cycle`` and the stream job's ``foreachBatch``."""
+    # claim + revive due RESPONSE retries each batch — without this,
+    # retry rows the job itself enqueues would sit PENDING forever.  The
+    # lease-swept claim revives rows a prior batch claimed but died
+    # before sinking, once the lease (ten trigger beats) expires.
+    claimed = claim_retry_batch(
+        spark, conn_factory, RETRY_JOB_RESPONSE, cfg,
+        reap_processing_after_s=cfg.processing_lease_s,
+    )
+    recovered, retry_emits = transform_response_retry_records(claimed, cfg)
+    result = process_response_batch(envelope.unionByName(recovered), cfg)
+
+    # Step 1: Kafka first, Step 2: DB transaction — the reference's ordering
+    # (InvoiceResponseBatchProcessor.java:205-218)
+    packet_sink(result.packets)
+    write_log_and_delete(result.db_ops, conn_factory, cfg)
+    write_retry_emissions(
+        result.retry.unionByName(retry_emits), conn_factory, cfg
+    )
+
+
 def response_cycle(
     spark: SparkSession,
     cfg: EngineConfig,
@@ -105,7 +141,6 @@ def response_cycle(
     packet_sink: Callable[[DataFrame], None],
     last_in_id: int = 0,
     last_out_id: int = 0,
-    claim_retries: bool = True,
 ) -> tuple[int, int]:
     """One poll-process-sink cycle of the response job; returns the advanced
     (inv_in, inv_out) high-water marks.  The driver loop calls this every
@@ -116,64 +151,44 @@ def response_cycle(
 
     inv_in, last_in_id = poll_async_inv_in(spark, conn_factory, cfg, last_in_id)
     inv_out, last_out_id = poll_async_inv_out(spark, conn_factory, cfg, last_out_id)
-    envelope = make_response_envelope(inv_in, inv_out)
-
-    retry_emits = None
-    if claim_retries:
-        claimed = claim_retry_batch(
-            spark, conn_factory, RETRY_JOB_RESPONSE, cfg,
-            reap_processing_after_s=cfg.processing_lease_s,
-        )
-        recovered, retry_emits = transform_response_retry_records(claimed, cfg)
-        envelope = envelope.unionByName(recovered)
-
-    result = process_response_batch(envelope, cfg)
-
-    # Step 1: Kafka first, Step 2: DB transaction — the reference's ordering
-    # (InvoiceResponseBatchProcessor.java:205-218)
-    packet_sink(result.packets)
-    write_log_and_delete(result.db_ops, conn_factory, cfg)
-    retry = result.retry if retry_emits is None else result.retry.unionByName(retry_emits)
-    write_retry_emissions(retry, conn_factory, cfg)
+    response_micro_batch(
+        make_response_envelope(inv_in, inv_out), spark, cfg, conn_factory,
+        packet_sink,
+    )
     return last_in_id, last_out_id
 
 
 def run_invoice_response_stream_job(
     spark: SparkSession,
     cfg: EngineConfig,
-    db_path: str,
     conn_factory: ConnFactory,
     packet_sink: Callable[[DataFrame], None],
     checkpoint_dir: str,
-    trigger_ms: int | None = None,
-    dedup_delay: str = "10 minutes",
 ):
     """The response job as ONE Structured Streaming query: both queue
     tables via the ``table_queue`` streaming source (offsets in the
-    checkpoint), watermark-bounded cross-batch dedup, then per micro-batch
-    the envelope pipeline + Kafka-then-DB sink ordering inside
+    checkpoint, reading the database ``conn_factory`` connects to),
+    arrival-time cross-batch dedup, then ``response_micro_batch`` inside
     ``foreachBatch``.
 
     This is the fully-streaming alternative to the ``response_cycle``
-    driver loop: same operators, but high-water marks and dedup state are
-    durable in the checkpoint, and the trigger interval plays the
-    reference's batch-timeout role (``InvoiceResponseBatchProcessor
-    .java:56``).  Returns the started ``StreamingQuery``.
+    driver loop: same micro-batch body, but high-water marks and dedup
+    state are durable in the checkpoint, and the trigger interval
+    (``response.batch.timeout.ms``) plays the reference's batch-timeout
+    role (``InvoiceResponseBatchProcessor.java:56``).  Returns the started
+    ``StreamingQuery``.
     """
-    from ..operators.response import (
-        RECORD_TYPE_INV_IN,
-        RECORD_TYPE_INV_OUT,
-        make_response_envelope,
-    )
-    from ..sources.stream import TableQueueDataSource
+    from ..operators.response import make_response_envelope
+    from ..sources.stream import TableQueueDataSource, table_queue_options
     from .dedup import streaming_dedup
 
     spark.dataSource.register(TableQueueDataSource)
+    options = table_queue_options(conn_factory)
 
     def queue_stream(table: str) -> DataFrame:
         return (
             spark.readStream.format("table_queue")
-            .option("db_path", db_path)
+            .options(**options)
             .option("table", table)
             .option("fetch_size", str(cfg.mysql_fetch_size))
             .load()
@@ -188,51 +203,25 @@ def run_invoice_response_stream_job(
     # them "late", silently drop them, and the source offset (already
     # advanced) would never re-read them.  The per-micro-batch timestamp
     # is monotone, so nothing is ever late, state stays bounded by the
-    # same delay, and the dedup horizon becomes "within `dedup_delay` of
-    # first ARRIVAL" — which is also closer to the reference's
+    # same delay, and the dedup horizon becomes "within RESPONSE_DEDUP_DELAY
+    # of first ARRIVAL" — which is also closer to the reference's
     # memory-lifetime dedup set than created_date ever was.
     envelope = envelope.withColumn("_arrival_ts", F.current_timestamp())
-    deduped = streaming_dedup(envelope, "_arrival_ts", dedup_delay).drop(
-        "_arrival_ts"
-    )
-
-    trigger_ms = trigger_ms or cfg.response_batch_timeout_ms
-    # the lease must stay comfortably above THIS job's actual trigger
-    # beat — a caller-supplied trigger_ms can exceed every cfg interval
-    # the config-derived lease knows about, and a lease below one beat
-    # would let a concurrent claimer reap live claims mid-epoch
-    lease_s = max(cfg.processing_lease_s, 10 * trigger_ms // 1000)
+    deduped = streaming_dedup(
+        envelope, "_arrival_ts", RESPONSE_DEDUP_DELAY
+    ).drop("_arrival_ts")
 
     def on_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        # claim + revive due RESPONSE retries each batch, exactly like the
-        # driver-loop `response_cycle` — without this, retry rows the
-        # stream job itself enqueues would sit PENDING forever in a
-        # stream-only deployment
-        spark_b = batch_df.sparkSession
-        # lease-swept claim: if a prior epoch died after its claim
-        # committed but before the sinks ran, its rows sit in PROCESSING
-        # where the replayed epoch cannot re-claim them — the reap
-        # revives them once the lease (10 trigger beats) expires
-        claimed = claim_retry_batch(
-            spark_b, conn_factory, RETRY_JOB_RESPONSE, cfg,
-            reap_processing_after_s=lease_s,
-        )
-        recovered, retry_emits = transform_response_retry_records(
-            claimed, cfg
-        )
-        batch = batch_df.unionByName(recovered)
-        result = process_response_batch(batch, cfg)
-        # Step 1 Kafka, Step 2 DB transaction — the reference's ordering
-        packet_sink(result.packets)
-        write_log_and_delete(result.db_ops, conn_factory, cfg)
-        write_retry_emissions(
-            result.retry.unionByName(retry_emits), conn_factory, cfg
+        response_micro_batch(
+            batch_df, batch_df.sparkSession, cfg, conn_factory, packet_sink
         )
 
     return (
         deduped.writeStream.foreachBatch(on_batch)
         .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime=f"{trigger_ms} milliseconds")
+        .trigger(
+            processingTime=f"{cfg.response_batch_timeout_ms} milliseconds"
+        )
         .start()
     )
 

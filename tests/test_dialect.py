@@ -2,7 +2,9 @@
 must be the reference's MySQL SQL verbatim (``sink/InvoiceRetrySink.java:
 33-42``, ``source/InvoiceRetrySource.java:48``), and the sinks/sources must
 bind the right parameter shapes under each dialect (delay seconds +
-DB-clock "now" for MySQL; absolute client timestamps for SQLite)."""
+DB-clock "now" for MySQL; absolute client timestamps for SQLite).  The
+dialect is the connection factory's, so the jobs handed a MySQL factory
+must send MySQL SQL end to end."""
 
 from __future__ import annotations
 
@@ -16,9 +18,17 @@ from flink_invoice_processor_spark.dbdialect import (
     MYSQL,
     MySQLConnFactory,
     SQLITE,
+    factory_dialect,
 )
-from flink_invoice_processor_spark.sinks.dbapi import write_retry_emissions
+from flink_invoice_processor_spark.sinks.dbapi import (
+    SqliteConnFactory,
+    write_retry_emissions,
+)
 from flink_invoice_processor_spark.sources.dbapi import claim_retry_batch
+from flink_invoice_processor_spark.streaming.jobs import (
+    request_micro_batch,
+    response_cycle,
+)
 
 CFG = EngineConfig()
 
@@ -130,6 +140,20 @@ class RecordingConnFactory:
             return [json.loads(line) for line in f]
 
 
+class MySQLRecordingConnFactory(RecordingConnFactory):
+    """A recording backend that declares the MySQL dialect, as
+    ``MySQLConnFactory`` does."""
+
+    dialect = MYSQL
+
+
+def test_factory_dialect_attribute():
+    assert SqliteConnFactory.dialect is SQLITE
+    assert MySQLConnFactory.dialect is MYSQL
+    # a factory without the attribute speaks SQLite
+    assert factory_dialect(RecordingConnFactory("unused")) is SQLITE
+
+
 def test_mysql_sink_binds_delay_seconds(spark, tmp_path):
     """Under MYSQL the retry sink must send the reference's server-side DML
     with the *delay in seconds* bound where SQLite binds a timestamp."""
@@ -143,7 +167,7 @@ def test_mysql_sink_binds_delay_seconds(spark, tmp_path):
         ],
         RETRY_EMIT_SCHEMA,
     ).coalesce(1)
-    write_retry_emissions(emits, RecordingConnFactory(log), CFG, dialect=MYSQL)
+    write_retry_emissions(emits, MySQLRecordingConnFactory(log), CFG)
 
     stmts = RecordingConnFactory(log).read()
     by_sql = {s["sql"]: s["params"] for s in stmts}
@@ -163,7 +187,7 @@ def test_mysql_claim_uses_db_clock(spark, tmp_path):
     ``next_retry_time <= CURRENT_TIMESTAMP`` with only the job bound."""
     log = str(tmp_path / "mysql_claim.jsonl")
     df = claim_retry_batch(
-        spark, RecordingConnFactory(log), "SendInvoiceJob", CFG, dialect=MYSQL
+        spark, MySQLRecordingConnFactory(log), "SendInvoiceJob", CFG
     )
     assert df.count() == 0
     (stmt,) = RecordingConnFactory(log).read()
@@ -193,10 +217,10 @@ def test_table_queue_mysql_backend_wires_factory():
             "table": "async_inv_out",
         }
     )
-    assert r._param == "%s"
-    assert isinstance(r._factory, MySQLConnFactory)
+    assert isinstance(r.conn_factory, MySQLConnFactory)
+    assert r.conn_factory.dialect is MYSQL
     with pytest.raises(ImportError):
-        r._connect()
+        r.conn_factory()
 
 
 def test_mysql_reap_uses_db_clock(spark, tmp_path):
@@ -205,10 +229,46 @@ def test_mysql_reap_uses_db_clock(spark, tmp_path):
     the cutoff must be DB-side arithmetic, never a client datetime."""
     log = str(tmp_path / "mysql_reap.jsonl")
     claim_retry_batch(
-        spark, RecordingConnFactory(log), "SendInvoiceJob", CFG,
-        dialect=MYSQL, reap_processing_after_s=60,
+        spark, MySQLRecordingConnFactory(log), "SendInvoiceJob", CFG,
+        reap_processing_after_s=60,
     )
     stmts = RecordingConnFactory(log).read()
     reap = [s for s in stmts if "PROCESSING" in s["sql"] and "PENDING" in s["sql"]][0]
     assert "CURRENT_TIMESTAMP - INTERVAL %s SECOND" in reap["sql"]
     assert reap["params"] == ["SendInvoiceJob", 60]
+
+
+def test_jobs_send_mysql_sql_to_a_mysql_factory(spark, tmp_path):
+    """Both jobs take the dialect from the connection factory: with a
+    MySQL factory every statement of a request micro-batch and of a
+    response cycle uses ``%s`` parameters, and the stale-claim reap runs
+    on the DB clock."""
+    log = str(tmp_path / "mysql_jobs.jsonl")
+    factory = MySQLRecordingConnFactory(log)
+    packets = spark.createDataFrame(
+        [
+            (json.dumps({"inv_pack": [
+                {"api_type": 10, "sid": "S-1", "syncid": "Y-1", "stax": "111"},
+                {"api_type": 10, "sid": "S-2", "inv": {"x": 1}},  # no stax
+            ]}),),
+        ],
+        "value string",
+    )
+    request_micro_batch(packets, spark, CFG, factory)
+    assert response_cycle(spark, CFG, factory, lambda df: df.count()) == (0, 0)
+
+    stmts = factory.read()
+    sqls = {s["sql"] for s in stmts}
+    assert MYSQL.retry_insert_sql() in sqls  # the no-stax element's CREATE
+    assert any(s.startswith("INSERT INTO async_inv_in ") for s in sqls)
+    assert any("FROM async_inv_in WHERE" in s for s in sqls)
+    assert any("FROM async_inv_out WHERE" in s for s in sqls)
+    for sql in sqls:
+        assert "%s" in sql and "?" not in sql, sql
+    reaps = [s for s in sqls if s.startswith("UPDATE invoice_retry SET state = 'PENDING'")]
+    assert len(reaps) == 1  # one statement, run by both jobs
+    assert "CURRENT_TIMESTAMP - INTERVAL %s SECOND" in reaps[0]
+    assert sorted(s["params"] for s in stmts if s["sql"] == reaps[0]) == [
+        ["REQUEST", CFG.processing_lease_s],
+        ["RESPONSE", CFG.processing_lease_s],
+    ]

@@ -1,6 +1,7 @@
 """End-to-end fully-streaming response job: table_queue sources → envelope →
 cross-batch dedup → batch/assemble/route → Kafka-equivalent sink then
-transactional log-and-delete, all inside one Structured Streaming query."""
+transactional log-and-delete, all inside one Structured Streaming query;
+due RESPONSE retry rows are revived into the same micro-batches."""
 
 from __future__ import annotations
 
@@ -16,7 +17,7 @@ from flink_invoice_processor_spark.streaming.jobs import (
 
 from test_sinks_sources import DDL
 
-CFG = EngineConfig()
+CFG = EngineConfig(response_batch_timeout_ms=300)
 
 
 def test_streaming_response_end_to_end(spark, tmp_path):
@@ -38,6 +39,20 @@ def test_streaming_response_end_to_end(spark, tmp_path):
         "VALUES ('333', '{\"gdt\":2}', 'S-9', 'Y-9', 0, 0, 0, 2, 10, "
         "'2026-01-01 00:00:03')"
     )
+    # one due RESPONSE retry row whose inv_in payload now validates
+    retry_payload = json.dumps({
+        "id": 77, "api_type": 12, "sid": "S-R", "syncid": "Y-R",
+        "tax_schema": "444", "res_type": 2, "retry": 1, "group_id": 0,
+        "fpt_einvoice_res_code": "200", "fpt_einvoice_res_json": '{"ok":3}',
+        "created_date": "2026-01-01 00:00:04",
+    })
+    conn.execute(
+        "INSERT INTO invoice_retry (sid, syncid, job, payload, error_message, "
+        "error_code, retry_count, state, next_retry_time) VALUES "
+        "('S-R', 'Y-R', 'RESPONSE', ?, 'boom', 'Exception', 0, 'PENDING', "
+        "'2020-01-01 00:00:00')",
+        (retry_payload,),
+    )
     conn.commit()
     conn.close()
 
@@ -56,15 +71,21 @@ def test_streaming_response_end_to_end(spark, tmp_path):
         finally:
             conn.close()
 
+    def retry_count():
+        conn = sqlite3.connect(db_path)
+        try:
+            return conn.execute("SELECT count(*) FROM invoice_retry").fetchone()[0]
+        finally:
+            conn.close()
+
     q = run_invoice_response_stream_job(
-        spark, CFG, db_path, factory, packet_sink,
-        str(tmp_path / "ckpt"), trigger_ms=300,
+        spark, CFG, factory, packet_sink, str(tmp_path / "ckpt")
     )
     try:
-        # wait for the END of the batch (the DB transaction), not just the
-        # packet sink — stopping mid-batch interrupts the log-and-delete
+        # wait for the END of the batch (the retry-queue DML), not just the
+        # packet sink — stopping mid-batch interrupts the DB writes
         deadline = time.time() + 90
-        while time.time() < deadline and succ_count() < 3:
+        while time.time() < deadline and (succ_count() < 4 or retry_count()):
             time.sleep(0.5)
     finally:
         q.stop()
@@ -75,12 +96,17 @@ def test_streaming_response_end_to_end(spark, tmp_path):
     assert next(i for i in crt if i["sid"] == "S-1")["status"] == "success"
     assert next(i for i in crt if i["sid"] == "S-9")["res_resource"] == "gdt"
     assert [i["sid"] for i in by_topic["mtt.upd.response"]["inv_pack_res"]] == ["S-2"]
+    # the revived retry row's item reached the packet sink
+    (revived,) = by_topic["mtt.del.response"]["inv_pack_res"]
+    assert revived["sid"] == "S-R" and revived["status"] == "success"
 
     # log-and-delete ran transactionally: success log filled, sources drained
     conn = sqlite3.connect(db_path)
     assert {r[0] for r in conn.execute("SELECT sid FROM async_inv_succ_log")} == {
-        "S-1", "S-2", "S-9"
+        "S-1", "S-2", "S-9", "S-R"
     }
     assert conn.execute("SELECT count(*) FROM async_inv_in").fetchone()[0] == 0
     assert conn.execute("SELECT count(*) FROM async_inv_out").fetchone()[0] == 0
+    # and its queue row was deleted
+    assert conn.execute("SELECT count(*) FROM invoice_retry").fetchone()[0] == 0
     conn.close()
